@@ -83,21 +83,19 @@ def bench_spatial_tile(spark, images_path: str, n: int):
     """The north-rule metric: bbox extract -> cell encode -> containment
     join (broadcast + PIP refine) -> tile assign -> per-tile counts.
 
-    Exact-PIP stage defaults to the zero-Python-worker native even-odd
-    form (2.2-2.5x faster at 512M and 0.867 N->4N scaling vs ~0.75 for
-    the Arrow/pandas form — each task slot occupies ONE hardware thread
-    instead of two); SPARK_GRAFT_REFINE=pandas switches back."""
+    The exact PIP is the zero-Python-worker native even-odd form (2.2-2.5x
+    faster at 512M and 0.867 N->4N scaling vs ~0.75 for the Arrow/pandas
+    form — each task slot occupies ONE hardware thread instead of two)."""
     from engine.flagship import DEFAULT_BBOX, NARROW_COLS
     from engine.geo.bbox import bbox_filter
     from engine.geo.cells import cell_parent_col, with_cell
     from engine.geo.join import candidates_join
     from engine.geo.layer import PolygonLayer
-    from engine.geo.pip import refine, refine_native
+    from engine.geo.pip import refine_native
     from engine.geo.tiles import tile_key_col
 
-    native = os.environ.get("SPARK_GRAFT_REFINE", "native") != "pandas"
     layer = PolygonLayer.from_json()
-    build = layer.build_df(spark, 8, with_edges=native)
+    build = layer.build_df(spark, 8, with_edges=True)
     build_rows = build.count()
 
     t0 = time.time()
@@ -106,7 +104,7 @@ def bench_spatial_tile(spark, images_path: str, n: int):
     probe = ext.withColumn("cell_p", cell_parent_col("cell", 8))
     cands = candidates_join(probe, build, mode="broadcast",
                             build_rows=build_rows)
-    refined = refine_native(cands) if native else refine(cands, layer.parts())
+    refined = refine_native(cands)
     counts = (refined.groupBy("poly_id", tile_key_col("cell", 12).alias("tile"))
               .agg(F.count("*").alias("n_images")))
     out_rows = counts.count()

@@ -13,9 +13,9 @@ from pyspark.sql import functions as F
 
 from engine.geo.bbox import bbox_filter
 from engine.geo.cells import cell_parent_col, with_cell
-from engine.geo.join import candidates_join
+from engine.geo.join import candidates_join, join_mode
 from engine.geo.layer import PolygonLayer
-from engine.geo.pip import refine, refine_native
+from engine.geo.pip import refine_native
 from engine.geo.skew import heavy_hitters
 from engine.geo.tiles import with_tile
 from engine.pipeline import Stage
@@ -23,14 +23,13 @@ from engine.synth import gen_images
 
 DEFAULT_BBOX = (-180.0, -85.05112878, 180.0, 85.05112878)
 NARROW_COLS = ["image_id", "lat", "lon"]
+SALT, HOT_TOP = 8, 4  # salt buckets / hot cells of a shuffled join
 
 
 def flagship_stages(layer: PolygonLayer, n_images: int, *, seed: int = 42,
                     bbox: tuple[float, float, float, float] = DEFAULT_BBOX,
-                    level: int = 8, z: int = 12, parts: int | None = None,
-                    salt: int = 8, hot_top: int = 4,
-                    mode: str = "auto",
-                    refine_mode: str = "native") -> list[Stage]:
+                    level: int = 8, z: int = 12,
+                    parts: int | None = None) -> list[Stage]:
     """Checkpointed stage list for the flagship pipeline.
 
     Column discipline: the spatial join and tiling run on NARROW columns
@@ -47,15 +46,16 @@ def flagship_stages(layer: PolygonLayer, n_images: int, *, seed: int = 42,
 
     def s_joined(spark: SparkSession, prev: DataFrame) -> DataFrame:
         probe = prev.withColumn("cell_p", cell_parent_col("cell", level))
-        hot = heavy_hitters(probe, "cell_p", top=hot_top,
-                            min_rows=max(64, n_images // 50))
-        build = layer.build_df(spark, level,
-                               with_edges=(refine_mode == "native"))
+        build = layer.build_df(spark, level, with_edges=True)
+        mode = join_mode(build.count())
+        # salting balances a shuffle; a broadcast join has none, so the
+        # heavy-hitter pre-pass (one Spark job) runs only when shuffling
+        hot = (heavy_hitters(probe, "cell_p", top=HOT_TOP,
+                             min_rows=max(64, n_images // 50))
+               if mode == "shuffle" else None)
         cands = candidates_join(probe, build, mode=mode, hot_keys=hot,
-                                salt=salt, build_rows=build.count())
-        if refine_mode == "native":
-            return refine_native(cands)
-        return refine(cands, layer.parts())
+                                salt=SALT)
+        return refine_native(cands)
 
     def s_tiled(spark: SparkSession, prev: DataFrame) -> DataFrame:
         return with_tile(prev, z=z, quadkey_col=True)

@@ -2,10 +2,11 @@
 Web-Mercator grid (SURVEY.md §2 C1/C2/C4; spec FIXTURES.md §3).
 
 BASELINE.json:6 — rows are "encoded to H3/S2 cells via vectorized
-pandas/Arrow UDFs (batched cell encode, no per-row Python)".  The encode
-is a scalar pandas UDF over whole Arrow batches (numpy bit ops); parent /
-prefix extraction is a *native* column expression (shiftright) so it stays
-inside whole-stage codegen and never crosses the Python boundary.
+pandas/Arrow UDFs (batched cell encode, no per-row Python)".  Here the
+encode goes one step further: it is a *native* column expression (the
+numpy kernels below are its test reference), as is parent / prefix
+extraction (shiftright), so the whole cell stage stays inside
+whole-stage codegen and never crosses the Python boundary.
 
 Scale note: the cell id is a single int64 — prefix joins, range pruning
 and partitioning all work on a primitive column, which is the cheapest
@@ -120,43 +121,24 @@ def merc_xy_sql(lon_col: str, lat_col: str, level: int = LEVEL) -> tuple[str, st
     return xi, yi
 
 
-def cell_encode_col(lon_col: str = "lon", lat_col: str = "lat") -> Column:
-    """C1, native form — the whole encode (mercator + Morton interleave)
-    as one JVM column expression: no Python worker in the hot path, and
-    the Morton cascade is the same magic-mask sequence as the numpy
-    kernel, so values are identical (floor-boundary agreement between
-    JVM and C libm verified empirically; the numpy UDF form remains the
-    reference kernel for tests).
-
-    NOTE for callers composing manually: the bit cascade references its
-    input 32x — feed it a *column*, never an inline ln/tan expression,
-    or the expression tree (and the generated Java) blows up ~64x.
-    `with_cell` binds xi/yi as intermediate columns for exactly this
-    reason."""
-    xi, yi = merc_xy_sql(lon_col, lat_col)
-    return F.expr(f"({part1by1_sql(xi)} | ({part1by1_sql(yi)} << 1))")
-
-
-@F.pandas_udf(LongType())
-def cell_encode_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-    """C1 — batched Arrow/numpy encode (reference kernel; same values as
-    cell_encode_col)."""
-    return pd.Series(cell_encode_np(lon.to_numpy(np.float64), lat.to_numpy(np.float64)))
-
-
 def with_cell(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon",
-              out: str = "cell", native: bool = True) -> DataFrame:
-    """Attach the level-30 cell id column (native codegen by default;
-    `native=False` selects the Arrow-batched numpy kernel)."""
-    if native:
-        xi, yi = merc_xy_sql(lon_col, lat_col)
-        return (
-            df.withColumn("_cx", F.expr(xi)).withColumn("_cy", F.expr(yi))
-            .withColumn(out, F.expr(
-                f"({part1by1_sql('_cx')} | ({part1by1_sql('_cy')} << 1))"))
-            .drop("_cx", "_cy")
-        )
-    return df.withColumn(out, cell_encode_udf(F.col(lat_col), F.col(lon_col)))
+              out: str = "cell") -> DataFrame:
+    """C1 — attach the level-30 cell id column as one native codegen
+    expression (mercator + Morton interleave, the same magic-mask
+    cascade as the numpy kernel `cell_encode_np`, which stays as the
+    test reference; floor-boundary agreement between JVM and C libm
+    verified empirically).
+
+    The bit cascade references its input 32x, so xi/yi are bound as
+    intermediate columns first — inlining the ln/tan expression would
+    blow the expression tree (and the generated Java) up ~64x."""
+    xi, yi = merc_xy_sql(lon_col, lat_col)
+    return (
+        df.withColumn("_cx", F.expr(xi)).withColumn("_cy", F.expr(yi))
+        .withColumn(out, F.expr(
+            f"({part1by1_sql('_cx')} | ({part1by1_sql('_cy')} << 1))"))
+        .drop("_cx", "_cy")
+    )
 
 
 def cell_parent_col(cell: Column | str, level: int) -> Column:

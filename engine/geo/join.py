@@ -10,8 +10,9 @@ Plan shape (scale rationale, SURVEY.md §4):
   join:   BROADCAST when the covering is small (almost always — it is
           bounded by the planner's cell budget), else SHUFFLE_HASH with
           both sides repartitioned on cell_p; explicit hot-cell salting
-          is layered on by engine/geo/skew.py.
-  refine: exact PIP via mapInPandas; `full` covering cells bypass it.
+          of that shuffle is layered on by engine/geo/skew.py.
+  refine: exact PIP as a native even-odd filter over per-cell edge
+          arrays; `full` covering cells bypass it.
 
 The bytes column (image payload) must be pruned *before* this join —
 callers select narrow columns; tests/test_plans.py asserts the scan's
@@ -25,10 +26,15 @@ from pyspark.sql import functions as F
 
 from .cells import cell_parent_col, with_cell
 from .layer import PolygonLayer
-from .pip import refine, refine_arrow, refine_native, refine_scalar
+from .pip import refine_native
 from .skew import salted_equijoin
 
 BROADCAST_MAX_BUILD_ROWS = 2_000_000  # ~2M (cell_p, poly_id) rows ≈ 50 MB
+
+
+def join_mode(build_rows: int) -> str:
+    """Broadcast a build side within the row budget, else shuffle."""
+    return "broadcast" if build_rows <= BROADCAST_MAX_BUILD_ROWS else "shuffle"
 
 
 def candidates_join(
@@ -43,20 +49,18 @@ def candidates_join(
 ) -> DataFrame:
     """Coarse equi-join on the cell prefix (or a composite key such as
     (blevel, cell_p) for the compacted multi-level build); broadcast /
-    shuffle / salted."""
+    shuffle / salted shuffle.  `hot_keys` salt only the shuffle join: a
+    broadcast join has no shuffle to balance, so it ignores them."""
     keys = [key] if isinstance(key, str) else list(key)
     if mode == "auto":
-        n = build_rows if build_rows is not None else build.count()
-        mode = "broadcast" if n <= BROADCAST_MAX_BUILD_ROWS else "shuffle"
-    if hot_keys:
-        # salted path (D4): only meaningful for the shuffle join — under a
-        # broadcast there is no shuffle to skew, but we keep it exercisable.
-        assert len(keys) == 1, "salted path joins on the single cell key"
-        return salted_equijoin(probe, build, key=keys[0], hot_keys=hot_keys,
-                               salt=salt, probe_id_col=probe_salt_col,
-                               broadcast_build=(mode == "broadcast"))
+        mode = join_mode(build_rows if build_rows is not None
+                         else build.count())
     if mode == "broadcast":
         return probe.join(F.broadcast(build), keys, "inner")
+    if hot_keys:
+        assert len(keys) == 1, "salted path joins on the single cell key"
+        return salted_equijoin(probe, build, key=keys[0], hot_keys=hot_keys,
+                               salt=salt, probe_id_col=probe_salt_col)
     return (
         probe.repartition(*[F.col(k) for k in keys])
         .join(build.hint("SHUFFLE_HASH"), keys, "inner")
@@ -73,7 +77,6 @@ def spatial_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     probe_salt_col: str = "image_id",
-    refine_mode: str = "native",
     compact_min_level: int | None = None,
 ) -> DataFrame:
     """images x layer containment join -> image rows + poly_id.
@@ -95,28 +98,19 @@ def spatial_join(
     `images` needs lat/lon; a `cell` column is reused if present, else
     encoded (native codegen expression).
 
-    `refine_mode`: "native" (default since r2) expresses the exact PIP
-    as an even-odd higher-order-function column over per-cell edge
-    arrays — ZERO Python stages; "pandas" ships candidates through one
-    Arrow batch to a vectorized numpy ray cast.  Both produce
-    bit-identical verdicts (same IEEE arithmetic; asserted by
-    tests/test_pip_native.py).  The default is measured, and
-    scale-dependent: an early 64M-row local[8] run had the HOF form ~2x
-    slower (HOFs are interpreted and disable codegen for their fused
-    stage), but at 512M rows on the r2 protocol the native form is
-    2.2-2.5x FASTER at both local[2] and local[8] (6.9M / 23.8M rows/s
-    vs 3.1M / 9.4M) — eliminating the per-slot Python worker removes
-    the second hardware thread each task occupies, which dominates once
-    the scan is long enough to amortize compile cost.  It also scales
-    at 0.867 N->4N (>= 0.8 target) where the pandas form is host-bound
-    at ~0.75 (BASELINE.md).  Re-measure before changing this default.
+    The exact PIP is `refine_native`: an even-odd higher-order-function
+    filter over per-cell edge arrays, ZERO Python stages.  Its verdicts
+    are bit-identical to the pandas ray cast `pip.refine` (same IEEE
+    arithmetic; asserted by tests/test_pip_native.py), which stays as the
+    test reference only: at 512M rows the native form measured 2.2-2.5x
+    faster at both local[2] and local[8] and scales 0.867 N->4N, where
+    the pandas form is host-bound at ~0.75 (BASELINE.md).
     """
     df = images if "cell" in images.columns else with_cell(images, lat_col, lon_col)
     if compact_min_level is not None:
         assert hot_keys is None, "compact join does not compose with salting"
         build, levels = layer.build_df_compact(
-            df.sparkSession, level, compact_min_level,
-            with_edges=(refine_mode == "native"))
+            df.sparkSession, level, compact_min_level)
         anc = F.explode(F.array(*[
             F.struct(F.lit(lv).cast("int").alias("blevel"),
                      cell_parent_col("cell", lv).alias("cell_p"))
@@ -130,22 +124,13 @@ def spatial_join(
         ).drop("blevel")
     else:
         probe = df.withColumn("cell_p", cell_parent_col("cell", level))
-        build = layer.build_df(df.sparkSession, level,
-                               with_edges=(refine_mode == "native"))
+        build = layer.build_df(df.sparkSession, level, with_edges=True)
         build_rows = build.count()  # driver-built covering: count is free-ish
         cands = candidates_join(
             probe, build, mode=mode, hot_keys=hot_keys, salt=salt,
             probe_salt_col=probe_salt_col, build_rows=build_rows,
         )
-    if refine_mode == "native":
-        return refine_native(cands, lon_col=lon_col, lat_col=lat_col)
-    if refine_mode == "scalar":
-        return refine_scalar(cands, layer.parts(), lon_col=lon_col,
-                             lat_col=lat_col)
-    if refine_mode == "arrow":
-        return refine_arrow(cands, layer.parts(), lon_col=lon_col,
-                            lat_col=lat_col)
-    return refine(cands, layer.parts(), lon_col=lon_col, lat_col=lat_col)
+    return refine_native(cands, lon_col=lon_col, lat_col=lat_col)
 
 
 def covering_overlap_join(

@@ -157,7 +157,7 @@ def make_safe_r_udf(level: int, r0: int = 1):
 def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
              r0: int = 1, max_rounds: int = 12,
              qid_col: str = "qid", id_col: str = "image_id",
-             native_dist: bool = True, cache_points: bool = False,
+             cache_points: bool = False,
              checkpoint_dir: str | None = None) -> DataFrame:
     """Exact kNN: for each query row, the k nearest points (dist asc, id
     tiebreak).  Returns (qid, image_id, dist_m, rn).
@@ -165,7 +165,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
     `queries` needs (qid, lat, lon); `points` needs (id, lat, lon) and
     reuses a `cell` column if present.
 
-    `native_dist` scores with the JVM-trig haversine (codegen; default).
+    Distances are the JVM-trig haversine (codegen, no Python worker).
     `cache_points=True` persists the narrow prepared points side so
     retry rounds don't rescan the base table — the right call when the
     points table fits cluster memory (benchmarks, dimension-sized
@@ -191,6 +191,8 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
     disk_udf = make_disk_r_udf(level)
     guar_udf = make_guarantee_udf(level)
     w = Window.partitionBy(qid_col).orderBy(F.asc("dist_m"), F.asc(id_col))
+    dist = haversine_expr(F.col("lon"), F.col("lat"),
+                          F.col("p_lon"), F.col("p_lat"))
 
     pending = q.withColumn("r", F.lit(r0))
     done_parts: list[DataFrame] = []
@@ -200,12 +202,6 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
             "cell_p", F.explode(disk_udf(F.col("q_cell"), F.col("r")))
         )
         cands = cand_cells.join(pts, "cell_p", "inner")
-        if native_dist:
-            dist = haversine_expr(F.col("lon"), F.col("lat"),
-                                  F.col("p_lon"), F.col("p_lat"))
-        else:
-            dist = haversine_udf(F.col("lon"), F.col("lat"),
-                                 F.col("p_lon"), F.col("p_lat"))
         scored = cands.withColumn("dist_m", dist)
         topk = (
             scored.withColumn("rn", F.row_number().over(w))
@@ -273,8 +269,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
 def dwithin_join(queries: DataFrame, points: DataFrame, level: int,
                  radius_m: float | None = None,
                  qid_col: str = "qid", id_col: str = "image_id",
-                 radius_col: str = "radius_m",
-                 native_dist: bool = True) -> DataFrame:
+                 radius_col: str = "radius_m") -> DataFrame:
     """D13 — radius (distance-within) join: for each query row, EVERY
     point within its radius (metres, great-circle).  Returns
     (qid, image_id, dist_m).
@@ -314,12 +309,8 @@ def dwithin_join(queries: DataFrame, points: DataFrame, level: int,
         .withColumn("cell_p", F.explode(disk_udf(F.col("q_cell"), F.col("r"))))
         .join(pts, "cell_p", "inner")
     )
-    if native_dist:
-        dist = haversine_expr(F.col("lon"), F.col("lat"),
-                              F.col("p_lon"), F.col("p_lat"))
-    else:
-        dist = haversine_udf(F.col("lon"), F.col("lat"),
-                             F.col("p_lon"), F.col("p_lat"))
+    dist = haversine_expr(F.col("lon"), F.col("lat"),
+                          F.col("p_lon"), F.col("p_lat"))
     return (cand.withColumn("dist_m", dist)
             .filter(F.col("dist_m") <= F.col("_rad"))
             .select(qid_col, id_col, "dist_m"))

@@ -271,6 +271,15 @@ class PolygonLayer:
         if not with_edges:
             rows = self.covering(level)
             return spark.createDataFrame(rows, schema=BUILD_SCHEMA)
+        rows = sorted(
+            (cell, pid, e["full"], None if e["full"] else e["edges"])
+            for (cell, pid), e in self._edge_covering(level).items()
+        )
+        return spark.createDataFrame(rows, schema=BUILD_EDGES_SCHEMA)
+
+    def _edge_covering(self, level: int) -> dict[tuple[int, str], dict]:
+        """{(cell, poly_id): {"full": bool, "edges": [...]}} at `level`;
+        a partial cell carries the edges of every part of its polygon."""
         seen: dict[tuple[int, str], dict] = {}
         for p in self.polygons:
             for ring, holes in p.split_antimeridian():
@@ -286,14 +295,10 @@ class PolygonLayer:
                         # A's edges an odd number of times and any other
                         # part's an even number
                         e["edges"].extend(edges)
-        rows = sorted(
-            (cell, pid, e["full"], None if e["full"] else e["edges"])
-            for (cell, pid), e in seen.items()
-        )
-        return spark.createDataFrame(rows, schema=BUILD_EDGES_SCHEMA)
+        return seen
 
     def build_df_compact(self, spark: SparkSession, level: int,
-                         min_level: int, with_edges: bool = True):
+                         min_level: int):
         """Compacted equi-join build side -> (DataFrame, levels).
 
         S2-CellUnion normalization applied to the FULL covering cells
@@ -313,39 +318,24 @@ class PolygonLayer:
         compact_min_level).
 
         Returns the build frame with schema (blevel:int, cell_p, poly_id,
-        full[, edges]) and the sorted list of levels actually present,
+        full, edges) and the sorted list of levels actually present,
         which the probe explodes over (absent levels cost nothing).
         """
         from oracle.geo import compact_cells_py
 
-        seen: dict[tuple[int, str], dict] = {}
-        for p in self.polygons:
-            for ring, holes in p.split_antimeridian():
-                edges = part_edges(ring, holes) if with_edges else None
-                for cell, full in cover_part(ring, holes, level):
-                    e = seen.setdefault((cell, p.poly_id),
-                                        {"full": False, "edges": []})
-                    if full:
-                        e["full"] = True
-                    elif with_edges:
-                        e["edges"].extend(edges)
         full_by_poly: dict[str, list[int]] = {}
         rows = []
-        for (cell, pid), e in sorted(seen.items()):
+        for (cell, pid), e in sorted(self._edge_covering(level).items()):
             if e["full"]:
                 full_by_poly.setdefault(pid, []).append(cell)
             else:
-                rows.append((level, cell, pid, False,
-                             e["edges"] if with_edges else None))
+                rows.append((level, cell, pid, False, e["edges"]))
         for pid, cells in sorted(full_by_poly.items()):
             for lv, cell in compact_cells_py(cells, level, min_level):
                 rows.append((lv, cell, pid, True, None))
         schema = StructType([
             StructField("blevel", IntegerType(), False),
             *BUILD_EDGES_SCHEMA.fields])
-        if not with_edges:
-            rows = [r[:4] for r in rows]
-            schema = StructType(schema.fields[:4])
         levels = sorted({r[0] for r in rows})
         return spark.createDataFrame(rows, schema=schema), levels
 

@@ -37,12 +37,12 @@ def heavy_hitters(df: DataFrame, key: str = "cell_p", top: int = 8,
 
 def salted_equijoin(probe: DataFrame, build: DataFrame, *, key: str,
                     hot_keys: list[int], salt: int = 8,
-                    probe_id_col: str = "image_id",
-                    broadcast_build: bool = False) -> DataFrame:
-    """Equi-join on `key` with hot keys spread over `salt` buckets."""
+                    probe_id_col: str = "image_id") -> DataFrame:
+    """Shuffle equi-join on `key` with hot keys spread over `salt`
+    buckets.  Broadcast joins have no shuffle to balance and are never
+    salted (engine/geo/join.py::candidates_join)."""
     if not hot_keys:
-        right = F.broadcast(build) if broadcast_build else build
-        return probe.join(right, key, "inner")
+        return probe.join(build, key, "inner")
     hot = F.array(*[F.lit(int(h)) for h in hot_keys])
     p = probe.withColumn(
         "_salt",
@@ -58,6 +58,5 @@ def salted_equijoin(probe: DataFrame, build: DataFrame, *, key: str,
             .otherwise(F.array(F.lit(0)))
         ),
     ).withColumn("_salt", F.col("_salt").cast("int"))
-    right = F.broadcast(b) if broadcast_build else b.hint("SHUFFLE_HASH")
-    joined = p.join(right, [key, "_salt"], "inner")
+    joined = p.join(b.hint("SHUFFLE_HASH"), [key, "_salt"], "inner")
     return joined.drop("_salt")

@@ -2,24 +2,21 @@
 
 BASELINE.json:6 — "raster<->vector tiling assigns each decoded image to
 slippy-map/H3 tiles".  Tile (z, x, y) is derived from the level-30 cell id
-with *native* bit ops (shiftright on the de-interleaved coords is not
-native, so we derive x/y from the cell's parent at level z, whose Morton
-bits are de-interleaved in a pandas UDF only for the quadkey string; the
-integer tile coords themselves come straight from the lon/lat batch encode
-or from the cell via the same UDF).
+with *native* bit ops: the tile is the cell's level-z parent (a
+shiftright), whose Morton bits are de-interleaved by a mask cascade into
+x/y; the quadkey string is built from x/y the same way.  The numpy
+kernels here are the test reference for those expressions.
 
 Design: at 10^12 rows the hot path (`with_tile`) adds three int columns
-via one Arrow-batched UDF call; the quadkey string is optional (strings
+inside whole-stage codegen; the quadkey string is optional (strings
 are ~8x the shuffle weight of ints — only materialize when exporting).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType
 
 from oracle.geo import LEVEL
 
@@ -39,27 +36,6 @@ def quadkey_np(x: np.ndarray, y: np.ndarray, z: int) -> np.ndarray:
         digit = ((x >> np.int64(i)) & 1) | (((y >> np.int64(i)) & 1) << np.int64(1))
         out = out + digit.astype(str).astype(object)
     return out
-
-
-def make_tile_udfs(z: int):
-    """pandas UDFs cell -> tile_x / tile_y / quadkey at zoom z."""
-
-    @F.pandas_udf(LongType())
-    def tile_x_udf(cell: pd.Series) -> pd.Series:
-        tx, _ = tile_xy_from_cell_np(cell.to_numpy(np.int64), z)
-        return pd.Series(tx)
-
-    @F.pandas_udf(LongType())
-    def tile_y_udf(cell: pd.Series) -> pd.Series:
-        _, ty = tile_xy_from_cell_np(cell.to_numpy(np.int64), z)
-        return pd.Series(ty)
-
-    @F.pandas_udf(StringType())
-    def quadkey_udf(cell: pd.Series) -> pd.Series:
-        tx, ty = tile_xy_from_cell_np(cell.to_numpy(np.int64), z)
-        return pd.Series(quadkey_np(tx, ty, z))
-
-    return tile_x_udf, tile_y_udf, quadkey_udf
 
 
 def tile_x_col(cell_col: str, z: int):
@@ -82,24 +58,14 @@ def quadkey_expr(tx: str, ty: str, z: int) -> str:
 
 
 def with_tile(df: DataFrame, z: int, cell_col: str = "cell",
-              quadkey_col: bool = False, native: bool = True) -> DataFrame:
+              quadkey_col: bool = False) -> DataFrame:
     """Attach tile_z / tile_x / tile_y (+ optional quadkey) columns.
 
-    Native by default: tile_morton = cell >> 2*(30-z) (the tile IS the
-    cell's level-z parent), and de-interleave/quadkey are pure bit-op
-    column expressions — the whole tiling stage stays in whole-stage
-    codegen with zero Python workers.  `native=False` selects the
-    Arrow-batched numpy kernels (reference form, identical values)."""
-    if not native:
-        tile_x_udf, tile_y_udf, quadkey_udf = make_tile_udfs(z)
-        out = (
-            df.withColumn("tile_z", F.lit(z))
-            .withColumn("tile_x", tile_x_udf(F.col(cell_col)))
-            .withColumn("tile_y", tile_y_udf(F.col(cell_col)))
-        )
-        if quadkey_col:
-            out = out.withColumn("quadkey", quadkey_udf(F.col(cell_col)))
-        return out
+    tile_morton = cell >> 2*(30-z) (the tile IS the cell's level-z
+    parent), and de-interleave/quadkey are pure bit-op column
+    expressions — the whole tiling stage stays in whole-stage codegen
+    with zero Python workers.  The numpy kernels `tile_xy_from_cell_np`
+    and `quadkey_np` are the test reference (identical values)."""
     out = (
         df.withColumn("tile_z", F.lit(z))
         .withColumn("tile_x", tile_x_col(cell_col, z))

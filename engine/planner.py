@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from engine.geo.join import BROADCAST_MAX_BUILD_ROWS
+from engine.geo.join import join_mode
 from engine.geo.layer import PolygonLayer
 
 
@@ -48,8 +48,7 @@ def choose_join_level(layer: PolygonLayer, max_cells: int = 4096,
 def plan_spatial_join(layer: PolygonLayer, max_cells: int = 4096) -> SpatialJoinPlan:
     level = choose_join_level(layer, max_cells=max_cells)
     rows = layer.covering_size(level)
-    mode = "broadcast" if rows <= BROADCAST_MAX_BUILD_ROWS else "shuffle"
-    return SpatialJoinPlan(level=level, mode=mode, covering_rows=rows)
+    return SpatialJoinPlan(level=level, mode=join_mode(rows), covering_rows=rows)
 
 
 def choose_knn_level(n_points: int, k: int, min_level: int = 2,

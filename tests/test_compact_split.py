@@ -220,7 +220,7 @@ def test_compact_join_build_is_smaller_and_broadcast(spark):
     from engine.geo.layer import PolygonLayer as PL
     layer = PL.from_json()
     full = layer.build_df(spark, 10, with_edges=True)
-    comp, levels = layer.build_df_compact(spark, 10, 5, with_edges=True)
+    comp, levels = layer.build_df_compact(spark, 10, 5)
     n_full, n_comp = full.count(), comp.count()
     assert n_comp < n_full / 3  # 9648 -> ~2967 on this layer
     assert levels and min(levels) >= 5 and max(levels) == 10

@@ -1,5 +1,5 @@
-"""refine_native (HOF even-odd PIP) vs the pandas ray-cast kernel: both
-must produce bit-identical verdicts — the arithmetic is pure +,-,*,/ and
+"""refine_native (HOF even-odd PIP) vs the pandas ray-cast reference
+`refine`: both must produce bit-identical verdicts — the arithmetic is pure +,-,*,/ and
 comparisons in the same operand order, IEEE-exact in both the JVM and
 numpy. Also guards the Spark 4.1 InferFiltersFromConstraints workaround
 (engine/geo/pip.py::refine_native)."""
@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import pytest
 
-from engine.geo.join import spatial_join
+from engine.geo.cells import cell_parent_col, with_cell
+from engine.geo.join import candidates_join, spatial_join
 from engine.geo.layer import PolygonLayer
+from engine.geo.pip import refine
 from engine.synth import gen_images
 
 
@@ -31,11 +33,17 @@ def _pairs(df):
                   for r in df.select("image_id", "poly_id").collect())
 
 
+def _pandas_join(imgs, layer, level):
+    probe = with_cell(imgs).withColumn("cell_p", cell_parent_col("cell", level))
+    build = layer.build_df(imgs.sparkSession, level)
+    return refine(candidates_join(probe, build, mode="broadcast"),
+                  layer.parts())
+
+
 @pytest.mark.parametrize("level", [6, 12])
-@pytest.mark.parametrize("mode", ["native", "arrow", "scalar"])
-def test_refine_modes_match_pandas(spark, imgs, layer, level, mode):
-    a = _pairs(spatial_join(imgs, layer, level=level, refine_mode=mode))
-    b = _pairs(spatial_join(imgs, layer, level=level, refine_mode="pandas"))
+def test_native_matches_pandas_refine(spark, imgs, layer, level):
+    a = _pairs(spatial_join(imgs, layer, level=level))
+    b = _pairs(_pandas_join(imgs, layer, level))
     assert a == b
     assert len(a) > 0
 
@@ -43,14 +51,13 @@ def test_refine_modes_match_pandas(spark, imgs, layer, level, mode):
 def test_native_repeated_runs_stable(spark, imgs, layer):
     # regression: the InferFiltersFromConstraints mis-push made this fail
     # nondeterministically at runtime (build-side attribute binding)
-    runs = {spatial_join(imgs, layer, level=12, refine_mode="native").count()
+    runs = {spatial_join(imgs, layer, level=12).count()
             for _ in range(3)}
     assert len(runs) == 1
 
 
 def test_native_plan_has_no_python_stage(spark, imgs, layer):
     from tests.test_plans import plan_of
-    plan = plan_of(spatial_join(imgs, layer, level=12, refine_mode="native"),
-                   "simple")
+    plan = plan_of(spatial_join(imgs, layer, level=12), "simple")
     # everything after the probe generator is JVM-side
     assert "ArrowEvalPython" not in plan.split("MapInPandas")[0]

@@ -89,8 +89,8 @@ def test_shuffle_mode_plans_shuffled_hash_join(spark, images_parquet):
 
 
 def test_cell_prefix_is_native_no_python_eval(spark, images_parquet):
-    # cell encode needs Python (Arrow batch), but prefix/tile-key math on an
-    # existing cell column must stay JVM-side (shiftright, codegen).
+    # prefix/tile-key math on an existing cell column must stay JVM-side
+    # (shiftright, codegen).
     df = spark.read.parquet(images_parquet).select("image_id") \
         .withColumn("cell", F.monotonically_increasing_id())
     plan = plan_of(with_cell_prefix(df, 8), "simple")
@@ -139,34 +139,28 @@ def test_cell_encode_native_has_zero_python_stages(spark, images_parquet):
     assert "*(" in plan  # stays inside whole-stage codegen
 
 
-def test_cell_encode_udf_form_is_single_arrow_batch_stage(spark, images_parquet):
-    df = with_cell(
-        spark.read.parquet(images_parquet).select("image_id", "lat", "lon"),
-        native=False)
-    plan = plan_of(df, "simple")
-    assert plan.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in plan
-
-
 def test_native_and_udf_cell_encode_agree(spark, images_parquet):
-    src = spark.read.parquet(images_parquet).select("image_id", "lat", "lon")
-    a = {r["image_id"]: r["cell"] for r in with_cell(src).collect()}
-    b = {r["image_id"]: r["cell"]
-         for r in with_cell(src, native=False).collect()}
-    assert a == b
+    # native with_cell vs the numpy reference kernel on the collected rows
+    import numpy as np
+    from engine.geo.cells import cell_encode_np
+    rows = with_cell(spark.read.parquet(images_parquet)
+                     .select("image_id", "lat", "lon")).collect()
+    want = cell_encode_np(np.array([r["lon"] for r in rows], np.float64),
+                          np.array([r["lat"] for r in rows], np.float64))
+    assert [r["cell"] for r in rows] == want.tolist()
 
 
 def test_native_and_udf_tiles_agree(spark, images_parquet):
-    from engine.geo.tiles import with_tile
+    # native with_tile vs the numpy reference kernels on the collected rows
+    import numpy as np
+    from engine.geo.tiles import quadkey_np, tile_xy_from_cell_np, with_tile
     src = with_cell(
         spark.read.parquet(images_parquet).select("image_id", "lat", "lon"))
-    cols = ("image_id", "tile_x", "tile_y", "quadkey")
-    a = sorted(tuple(r[c] for c in cols)
-               for r in with_tile(src, z=12, quadkey_col=True).collect())
-    b = sorted(tuple(r[c] for c in cols)
-               for r in with_tile(src, z=12, quadkey_col=True,
-                                  native=False).collect())
-    assert a == b
+    rows = with_tile(src, z=12, quadkey_col=True).collect()
+    tx, ty = tile_xy_from_cell_np(
+        np.array([r["cell"] for r in rows], np.int64), 12)
+    assert [(r["tile_x"], r["tile_y"], r["quadkey"]) for r in rows] == \
+        list(zip(tx.tolist(), ty.tolist(), quadkey_np(tx, ty, 12).tolist()))
 
 
 def test_near_dup_lsh_path_is_equi_join_not_nested_loop(spark):
@@ -199,6 +193,23 @@ def test_auto_mode_picks_shuffle_for_huge_build(spark, images_parquet):
     plan = plan_of(candidates_join(probe, build, mode="auto",
                                    build_rows=10**9), "simple")
     assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
+
+
+def test_flagship_broadcast_join_is_not_salted(spark, images_parquet,
+                                                monkeypatch):
+    # the 12-polygon covering broadcasts: there is no shuffle to balance,
+    # so the joined stage runs no heavy-hitter pass and adds no salt even
+    # when a hot cell exists
+    import engine.flagship as fs
+    calls = []
+    monkeypatch.setattr(fs, "heavy_hitters",
+                        lambda *a, **k: calls.append(a) or [0])
+    _, extract, joined = fs.flagship_stages(PolygonLayer.from_json(), 200)[:3]
+    images = spark.read.parquet(images_parquet)
+    plan = plan_of(joined.fn(spark, extract.fn(spark, images)), "simple")
+    assert "BroadcastHashJoin" in plan, plan
+    assert "_salt" not in plan, plan
+    assert calls == []
 
 
 def test_minhash_dedup_plan_has_no_nested_loop(spark):
